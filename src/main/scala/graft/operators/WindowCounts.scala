@@ -42,24 +42,35 @@ object WindowCounts {
     * key, where it separates real null-key addresses from placeholders),
     * which keeps the filter expressible after a streaming aggregation.
     */
-  private def windowed(snapshots: DataFrame, keyExpr: Column, keyName: String,
+  private def windowed(snapshots: DataFrame, keys: Seq[(Column, String)],
       procTimeCol: String, windowLength: String): DataFrame =
     explodedAddresses(snapshots, procTimeCol)
-      .groupBy(
-        window(col(procTimeCol), windowLength).as("win"),
-        keyExpr.as(keyName),
-        col("addr").isNotNull.as("is_real"))
+      .groupBy(window(col(procTimeCol), windowLength).as("win") +:
+        keys.map { case (expr, name) => expr.as(name) } :+
+        col("addr").isNotNull.as("is_real"): _*)
       .count()
       .filter(col("is_real"))
-      .select(col("win.start").as("window_start"), col(keyName), col("count"))
+      .select(col("win.start").as("window_start") +: keys.map(k => col(k._2)) :+
+        col("count"): _*)
 
   /** A1: per-window address count by state (`Main.java:136-150`). */
   def countByState(snapshots: DataFrame, procTimeCol: String = "procTime",
       windowLength: String = "1 minute"): DataFrame =
-    windowed(snapshots, col("addr.state"), "state", procTimeCol, windowLength)
+    windowed(snapshots, Seq(col("addr.state") -> "state"), procTimeCol, windowLength)
 
   /** A2: per-window address count by country (`Main.java:153-167`). */
   def countByCountry(snapshots: DataFrame, procTimeCol: String = "procTime",
       windowLength: String = "1 minute"): DataFrame =
-    windowed(snapshots, col("addr.country"), "country", procTimeCol, windowLength)
+    windowed(snapshots, Seq(col("addr.country") -> "country"), procTimeCol, windowLength)
+
+  /** A1 and A2 in one aggregation: per-window address count at
+    * (window_start, state, country) grain. Summing it over `country` gives
+    * `countByState`, over `state` gives `countByCountry`, null keys
+    * included. Its size is bounded by the distinct state × country pairs
+    * per window, so one collect of it serves both count sinks.
+    */
+  def countByStateAndCountry(snapshots: DataFrame, procTimeCol: String = "procTime",
+      windowLength: String = "1 minute"): DataFrame =
+    windowed(snapshots, Seq(col("addr.state") -> "state", col("addr.country") -> "country"),
+      procTimeCol, windowLength)
 }

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** S1–S3: idempotent last-write-wins upsert sink keyed by one field.
   *
@@ -46,9 +47,16 @@ object DocumentSink {
       case None => batchDeduped
       case Some(ex) =>
         // anti-join keeps only keys NOT overwritten by this batch; at scale
-        // this is the standard copy-on-write merge (Delta-style); the batch
-        // side is small relative to the table and broadcast-eligible.
-        ex.join(batchDeduped.select(keyField), Seq(keyField), "left_anti")
+        // this is the standard copy-on-write merge (Delta-style). The match
+        // is null-safe: a null key (the null-state count group) is one key,
+        // as in the in-memory sink, and is overwritten like any other.
+        // The join is pinned to a shuffle join, so a version is at most
+        // twice `spark.sql.shuffle.partitions` files. A broadcast join would
+        // keep the table's scan partitions, one per file of the previous
+        // version, and add the batch's, so the file count would grow with
+        // every version.
+        val overwritten = batchDeduped.select(col(keyField).as("__key"))
+        ex.join(overwritten.hint("shuffle_merge"), col(keyField) <=> col("__key"), "left_anti")
           .unionByName(batchDeduped)
     }
 }
@@ -56,7 +64,7 @@ object DocumentSink {
 /** Test/driver-local sink holding the keyed table in driver memory. */
 final class InMemoryDocumentSink extends DocumentSink {
   private val table = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
-  @volatile private var lastSchema: org.apache.spark.sql.types.StructType = _
+  @volatile private var lastSchema: StructType = _
 
   override def upsert(batch: DataFrame, keyField: String, orderCol: Option[String]): Unit = {
     val deduped = DocumentSink.lastWritePerKey(batch, keyField, orderCol)
@@ -85,6 +93,11 @@ final class InMemoryDocumentSink extends DocumentSink {
   */
 final class ParquetDocumentSink(path: String) extends DocumentSink {
   private val fs = java.nio.file.Paths.get(path)
+  /** (version, schema) of the version this instance last wrote or read.
+    * Reading that version with its schema skips the Spark job that infers
+    * a schema from the Parquet footers; a new instance infers once.
+    */
+  @volatile private var known: Option[(Int, StructType)] = None
 
   private def versionFile = fs.resolve("_VERSION")
   private def currentVersion: Int =
@@ -96,19 +109,32 @@ final class ParquetDocumentSink(path: String) extends DocumentSink {
     val spark = batch.sparkSession
     val deduped = DocumentSink.lastWritePerKey(batch, keyField, orderCol)
     val v = currentVersion
-    val existing =
-      if (v >= 0) Some(spark.read.parquet(fs.resolve(s"v$v").toString)) else None
+    val existing = if (v >= 0) Some(read(spark, v)) else None
     val merged = DocumentSink.merge(existing, deduped, keyField)
     val next = v + 1
     merged.write.mode("overwrite").parquet(fs.resolve(s"v$next").toString)
     java.nio.file.Files.createDirectories(fs)
     java.nio.file.Files.write(versionFile, next.toString.getBytes)
+    // a file-source read makes every field nullable, with or without a
+    // given schema, so the written schema reads back as inference would
+    known = Some((next, merged.schema))
+  }
+
+  private def read(spark: SparkSession, v: Int): DataFrame = {
+    val dir = fs.resolve(s"v$v").toString
+    known match {
+      case Some((`v`, schema)) => spark.read.schema(schema).parquet(dir)
+      case _ =>
+        val df = spark.read.parquet(dir)
+        known = Some((v, df.schema))
+        df
+    }
   }
 
   override def snapshot(spark: SparkSession): DataFrame = {
     val v = currentVersion
     require(v >= 0, s"no data written to $path yet")
-    spark.read.parquet(fs.resolve(s"v$v").toString)
+    read(spark, v)
   }
 
   override def snapshotOption(spark: SparkSession): Option[DataFrame] =

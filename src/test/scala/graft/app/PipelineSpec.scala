@@ -1,12 +1,13 @@
 package graft.app
 
 import graft.SparkSpecBase
-import graft.sinks.InMemoryDocumentSink
+import graft.JobLog
+import graft.sinks.{DocumentSink, InMemoryDocumentSink, ParquetDocumentSink}
 import graft.sources.IngestSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** End-to-end: two JSON streams → parse → J1 → three upsert sinks, the full
   * reference topology (`/root/reference/src/main/java/Main.java:45-182`)
@@ -54,57 +55,117 @@ class PipelineSpec extends SparkSpecBase {
     assert(addrs.map(_.getString(0)) == Seq("a1"))
   }
 
-  test("shared single-state topology converges to the same sink state as startAll") {
+  private def nullStateAddrJson(uid: String, tag: String, country: String) =
+    s"""{"userId":"$uid","address":"$tag","city":"c","state":null,"zipCode":"z","country":"$country"}"""
+
+  /** The F2 interleaving, one event per micro-batch: Left is a user
+    * message, Right an address.
+    */
+  private val f2Steps: Seq[Either[String, String]] = Seq(
+    Left(userJson("u1", "Maria", "2026-01-01T10:00:10.000000+0000")),
+    Right(addrJson("u1", "a1", "IL", "BR")),
+    // two addresses in ONE batch: the shared path must accumulate the
+    // batch partial (IL+2) onto the prior partial (IL+1), not overwrite
+    Right(addrJson("u1", "a2", "IL", "BR")),
+    Right(addrJson("u1", "a3", "NY", "US")),
+    Left(userJson("u2", "Joao", "2026-01-01T10:05:30.000000+0000")),
+    Left(userJson("u3", "Ana", "2026-01-01T10:06:00.000000+0000")))
+
+  /** Replay `steps` through the queries `start` launches, with fresh
+    * sources and checkpoint; returns the stopped queries.
+    */
+  private def replay(steps: Seq[Either[String, String]],
+      sinks: (DocumentSink, DocumentSink, DocumentSink))(
+      start: (Pipeline, String) => Seq[StreamingQuery]): Seq[StreamingQuery] = {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.streaming.StreamingQuery
-
-    // identical F2 interleaving through either topology, fresh sinks each run
-    def run(start: (Pipeline, String) => Seq[StreamingQuery])
-        : (InMemoryDocumentSink, InMemoryDocumentSink, InMemoryDocumentSink) = {
-      val userStream = MemoryStream[String]
-      val addrStream = MemoryStream[String]
-      val source = new IngestSource {
-        override def users(s: SparkSession): DataFrame = userStream.toDF().toDF("value")
-        override def addresses(s: SparkSession): DataFrame = addrStream.toDF().toDF("value")
-      }
-      val (ua, st, co) =
-        (new InMemoryDocumentSink, new InMemoryDocumentSink, new InMemoryDocumentSink)
-      val pipeline = new Pipeline(source, ua, st, co,
-        windowLength = "1 minute", procTimeExpr = col("user.registerDate"))
-      val cp = java.nio.file.Files.createTempDirectory("graft-cp-shared").toString
-      val queries = start(pipeline, cp)
-      try {
-        userStream.addData(userJson("u1", "Maria", "2026-01-01T10:00:10.000000+0000"))
-        queries.foreach(_.processAllAvailable())
-        addrStream.addData(addrJson("u1", "a1", "IL", "BR"))
-        queries.foreach(_.processAllAvailable())
-        // two addresses in ONE batch: the shared path must accumulate the
-        // batch partial (IL+2) onto the prior partial (IL+1), not overwrite
-        addrStream.addData(addrJson("u1", "a2", "IL", "BR"))
-        queries.foreach(_.processAllAvailable())
-        addrStream.addData(addrJson("u1", "a3", "NY", "US"))
-        queries.foreach(_.processAllAvailable())
-        userStream.addData(userJson("u2", "Joao", "2026-01-01T10:05:30.000000+0000"))
-        queries.foreach(_.processAllAvailable())
-        userStream.addData(userJson("u3", "Ana", "2026-01-01T10:06:00.000000+0000"))
-        queries.foreach(_.processAllAvailable())
-      } finally queries.foreach(_.stop())
-      (ua, st, co)
+    val userStream = MemoryStream[String]
+    val addrStream = MemoryStream[String]
+    val source = new IngestSource {
+      override def users(s: SparkSession): DataFrame = userStream.toDF().toDF("value")
+      override def addresses(s: SparkSession): DataFrame = addrStream.toDF().toDF("value")
     }
+    val pipeline = new Pipeline(source, sinks._1, sinks._2, sinks._3,
+      windowLength = "1 minute", procTimeExpr = col("user.registerDate"))
+    val cp = java.nio.file.Files.createTempDirectory("graft-cp-shared").toString
+    val queries = start(pipeline, cp)
+    try steps.foreach { step =>
+      step.fold(userStream.addData(_), addrStream.addData(_))
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+    queries
+  }
 
-    val (ua1, st1, co1) = run((p, cp) => p.startAll(spark, cp, Trigger.ProcessingTime(0)))
-    val (ua2, st2, co2) = run((p, cp) => Seq(p.startAllShared(spark, cp, Trigger.ProcessingTime(0))))
+  private def inMemorySinks() =
+    (new InMemoryDocumentSink, new InMemoryDocumentSink, new InMemoryDocumentSink)
 
-    // snap_order is a physical emission stamp (monotonic id), not part of
-    // the logical document — compare everything else exactly
-    def canon(s: InMemoryDocumentSink, dropCols: String*): Set[String] =
-      s.snapshot(spark).drop(dropCols: _*).collect().map(_.toString).toSet
+  // snap_order is a physical emission stamp (monotonic id), not part of
+  // the logical document — compare everything else exactly, duplicates too
+  private def canon(s: DocumentSink, dropCols: String*): Seq[String] =
+    s.snapshot(spark).drop(dropCols: _*).collect().map(_.toString).toSeq.sorted
+
+  test("shared single-state topology converges to the same sink state as startAll") {
+    val (ua1, st1, co1) = inMemorySinks()
+    replay(f2Steps, (ua1, st1, co1))((p, cp) => p.startAll(spark, cp, Trigger.ProcessingTime(0)))
+    val (ua2, st2, co2) = inMemorySinks()
+    replay(f2Steps, (ua2, st2, co2))(
+      (p, cp) => Seq(p.startAllShared(spark, cp, Trigger.ProcessingTime(0))))
+
     assert(canon(ua2, "snap_order") == canon(ua1, "snap_order"))
     assert(canon(st2) == canon(st1))
     assert(canon(co2) == canon(co1))
     // and the converged values are the §2.1 over-counts
     assert(st2.get("IL").map(_.getLong(2)).contains(5L))
     assert(co2.get("BR").map(_.getLong(2)).contains(5L))
+  }
+
+  test("shared topology into Parquet sinks matches startAll; one micro-batch's Spark jobs are bounded") {
+    // F2 plus a null-state address in u1's 10:00 window, and an IL/BR
+    // address of u2 in the 10:05 window, closed by u4
+    val steps = f2Steps.take(4) ++ Seq(
+      Right(nullStateAddrJson("u1", "a4", "BR")),
+      f2Steps(4),
+      Right(addrJson("u2", "b1", "IL", "BR")),
+      f2Steps(5),
+      Left(userJson("u4", "Rui", "2026-01-01T10:07:30.000000+0000")))
+    val (ua1, st1, co1) = inMemorySinks()
+    replay(steps, (ua1, st1, co1))((p, cp) => p.startAll(spark, cp, Trigger.ProcessingTime(0)))
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-shared-parquet")
+    val Seq(ua2, st2, co2) = Seq("userAddress", "state", "country")
+      .map(n => new ParquetDocumentSink(dir.resolve(n).toString))
+    val jobLog = JobLog.start(spark.sparkContext)
+    val shared = try replay(steps, (ua2, st2, co2))(
+      (p, cp) => Seq(p.startAllShared(spark, cp, Trigger.ProcessingTime(0)))).head
+    finally jobLog.stop()
+
+    assert(canon(ua2, "snap_order") == canon(ua1, "snap_order"))
+    assert(canon(st2) == canon(st1))
+    assert(canon(co2) == canon(co1))
+    def counts(s: DocumentSink, key: String): Map[Option[String], (String, Long)] =
+      s.snapshot(spark).collect().map(r => Option(r.getAs[String](key)) ->
+        (r.getAs[java.sql.Timestamp]("window_start").toString, r.getAs[Long]("count"))).toMap
+    val (w0, w5) = ("2026-01-01 10:00:00.0", "2026-01-01 10:05:00.0")
+    // the newest window wins per key; the null state is its own group
+    assert(counts(st2, "state") ==
+      Map(Some("IL") -> (w5 -> 1L), Some("NY") -> (w0 -> 2L), None -> (w0 -> 1L)))
+    assert(counts(co2, "country") == Map(Some("BR") -> (w5 -> 1L), Some("US") -> (w0 -> 2L)))
+
+    // Micro-batch 2 (address a2) runs with every sink already written once,
+    // the steady state. Its jobs (a stream's batch plans run without AQE,
+    // and every sink merge is a shuffle join, so a shuffle is a stage, not
+    // a job of its own):
+    //  1. isEmpty, the emptiness probe, which starts filling the cache;
+    //  2. the userAddress upsert's Parquet write;
+    //  3. the window aggregation's collect, one for both count sinks;
+    //  4. the state sink's read-merge-write;
+    //  5. the country sink's read-merge-write.
+    // Sink reads use the schema each sink recorded, so no schema-inference
+    // job runs. With an emptiness probe run before the cache, one per count
+    // sink's partial, a broadcast per count-sink merge and a
+    // schema-inference job per sink read (five), the same batch ran 13 jobs.
+    assert(shared.recentProgress.find(_.batchId == 2).map(_.numInputRows).contains(1L))
+    val jobs = jobLog.microBatchJobs(shared.id, 2)
+    assert(jobs.size <= 5)
   }
 
   test("full topology: snapshots upserted by userId; windowed counts by state/country") {

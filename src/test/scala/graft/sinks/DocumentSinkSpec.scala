@@ -28,11 +28,22 @@ class DocumentSinkSpec extends SparkSpecBase {
   test("parquet sink: versioned copy-on-write upsert, reread across versions") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
     val sink = new ParquetDocumentSink(dir)
-    sink.upsert(Seq(("u1", "a"), ("u2", "b")).toDF("userId", "payload"), "userId")
-    sink.upsert(Seq(("u2", "B2"), ("u3", "c")).toDF("userId", "payload"), "userId")
-    val out = sink.snapshot(spark).collect()
+    // n and tags are non-nullable in the batch; a Parquet read makes them nullable
+    sink.upsert(Seq(("u1", "a", 1L, Seq(1)), ("u2", "b", 2L, Seq(2)))
+      .toDF("userId", "payload", "n", "tags"), "userId")
+    sink.upsert(Seq(("u2", "B2", 3L, Seq(3, 4)), ("u3", "c", 4L, Seq.empty[Int]))
+      .toDF("userId", "payload", "n", "tags"), "userId")
+    val written = sink.snapshot(spark)
+    val out = written.collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(out == Map("u1" -> "a", "u2" -> "B2", "u3" -> "c"))
+
+    // a new instance, as after a restart, has no recorded schema: it infers
+    // one from the files, and must agree with the writer's recorded schema
+    val reopened = new ParquetDocumentSink(dir).snapshot(spark)
+    assert(reopened.schema == written.schema, reopened.schema.treeString)
+    assert(reopened.schema("n").nullable)
+    assert(reopened.collect().map(_.toString).toSet == written.collect().map(_.toString).toSet)
   }
 
   test("parquet sink vacuum keeps the newest versions and the table stays readable") {
