@@ -176,8 +176,8 @@ object Layout {
 
   /** Boundary samples for block placement, fused across dimensions:
     * per requested image, the DISTINCT sampled values of that image —
-    * ONE aggregate pass (per-dim `approx_count_distinct` sizes each
-    * keep fraction) plus ONE scan whose hash-mod filter + distinct
+    * ONE aggregate pass (a per-dim row `count` sizes each keep
+    * fraction) plus ONE scan whose hash-mod filter + distinct
     * bound the collect by ~2·target DISTINCT values per dim at any
     * corpus size (round-17, ADVICE: the previous row-level collect was
     * unbounded under duplication skew — every row of a kept hot value

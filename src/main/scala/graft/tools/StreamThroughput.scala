@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.core.Schemas
-import graft.operators.{EnrichmentJoinTws, Envelope}
+import graft.operators.{EnrichmentJoin, Envelope}
 import graft.sources.{FileIngestSource, FixtureGenerator}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Streaming probes for the J1 path. Three modes:
   *
   *  - `join` (default): raw throughput of N generated wire messages →
-  *    file source → JSON parse → transformWithState enrichment join
-  *    (RocksDB state store) → counted sink. Prints wall-clock and msg/s.
+  *    file source → JSON parse → `EnrichmentJoin.joinStream` (RocksDB
+  *    state store) → counted sink. Prints wall-clock and msg/s.
   *    Context: the reference's producer emits 40 Kafka messages per run
   *    total (`user-generator.py`, BASELINE.md) with a parallelism-1
   *    aggregation downstream, so any sustained five-digit msg/s figure is
@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    print wall-clock + total state-store rows for each. Expected: ~3×
   *    state rows and ~3× join compute for the triple topology.
   *
-  *  - `ttl`: state-growth evidence for TTLConfig — replay a key-churn
+  *  - `ttl`: state-growth evidence for `stateTtl` — replay a key-churn
   *    workload (three waves of fresh keys, idle gaps between waves) with
   *    TTL off vs TTL on and print final state rows. TTL-off retains every
   *    key ever seen; TTL-on converges to ~one wave's working set.
@@ -100,7 +100,7 @@ object StreamThroughput {
     val source = new FileIngestSource(dir, streaming = true)
     val users = Schemas.parseUsers(source.users(spark)).map(Envelope.ofUser(_, 0L))
     val addrs = Schemas.parseAddresses(source.addresses(spark)).map(Envelope.ofAddress(_, 1L))
-    val snapshots = EnrichmentJoinTws.joinStream(spark, users.unionByName(addrs))
+    val snapshots = EnrichmentJoin.joinStream(spark, users.unionByName(addrs))
 
     val t0 = System.nanoTime()
     val q = snapshots.toDF()
@@ -167,7 +167,7 @@ object StreamThroughput {
             id, s"$i Main St", "Springfield", "ST", "12345", "US"))))
       }: _*)
       val t0 = System.nanoTime()
-      val q = EnrichmentJoinTws.joinStream(spark, input.toDS())
+      val q = EnrichmentJoin.joinStream(spark, input.toDS())
         .toDF().select(col("user.id"))
         .writeStream
         .option("checkpointLocation", cp)
@@ -214,12 +214,12 @@ object StreamThroughput {
             id, s"u$id", s"u$id@x.org", "F",
             java.sql.Timestamp.valueOf("2026-01-01 10:00:00"))), None)
         }: _*)
-        // Trigger.Once, not AvailableNow: under TimeMode.ProcessingTime the
-        // TTL timer keeps scheduling no-data batches, so an AvailableNow
+        // Trigger.Once, not AvailableNow: under ProcessingTimeTimeout the
+        // state operator keeps scheduling no-data batches, so an AvailableNow
         // query busy-loops for its full await window and floods
         // recentProgress; one batch per restart is exactly the probe shape
         @annotation.nowarn("cat=deprecation")
-        val q = EnrichmentJoinTws.joinStream(spark, input.toDS(), ttl)
+        val q = EnrichmentJoin.joinStream(spark, input.toDS(), ttl)
           .toDF().select(col("user.id"))
           .writeStream
           .option("checkpointLocation", cp)

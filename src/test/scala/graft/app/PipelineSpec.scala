@@ -223,90 +223,86 @@ class PipelineSpec extends SparkSpecBase {
 
   test("event-time opt-in mode: late address dropped where processing-time mode admits it") {
     import graft.core.{Address, User}
-    import graft.operators.{EnrichmentJoinTws, Envelope, TimedEnvelope}
+    import graft.operators.{EnrichmentJoin, Envelope}
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val u1 = User("u1", "Maria", "u1@x.org", "F", ts("2026-01-01 10:00:10"))
     def addr(tag: String) = Address("u1", tag, "c", "IL", "z", "BR")
+    // ---- event-time mode: watermark on eventTime, 0s lateness
+    val etIn = MemoryStream[Envelope]
+    val et = EnrichmentJoin.joinStreamEventTime(spark, etIn.toDS())
+      .toDF().writeStream.format("memory").queryName("j1_et")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    // ---- processing-time mode: the same interleaving, reference contract
+    val ptIn = MemoryStream[Envelope]
+    val pt = EnrichmentJoin.joinStream(spark, ptIn.toDS())
+      .toDF().writeStream.format("memory").queryName("j1_pt")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     try {
-      // ---- event-time mode: watermark on eventTime, 0s lateness
-      val etIn = MemoryStream[TimedEnvelope]
-      val et = EnrichmentJoinTws.joinStreamEventTime(spark, etIn.toDS())
-        .toDF().writeStream.format("memory").queryName("j1_et")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      // ---- processing-time mode: the same interleaving, reference contract
-      val ptIn = MemoryStream[Envelope]
-      val pt = EnrichmentJoinTws.joinStream(spark, ptIn.toDS())
-        .toDF().writeStream.format("memory").queryName("j1_pt")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        // batch 1: user + on-time address at 10:00:10 — watermark advances
-        // to 10:00:10 after this batch in the event-time query
-        etIn.addData(TimedEnvelope.ofUser(u1, 0),
-          TimedEnvelope.ofAddress(addr("a1"), ts("2026-01-01 10:00:10"), 1))
-        ptIn.addData(Envelope.ofUser(u1, 0), Envelope.ofAddress(addr("a1"), 1))
-        et.processAllAvailable(); pt.processAllAvailable()
-        // batch 2: a LATE address (event time 09:59:50, behind the
-        // watermark) then an on-time one at 10:00:30
-        etIn.addData(
-          TimedEnvelope.ofAddress(addr("late"), ts("2026-01-01 09:59:50"), 1),
-          TimedEnvelope.ofAddress(addr("a3"), ts("2026-01-01 10:00:30"), 2))
-        ptIn.addData(Envelope.ofAddress(addr("late"), 1),
-          Envelope.ofAddress(addr("a3"), 2))
-        et.processAllAvailable(); pt.processAllAvailable()
+      // batch 1: user + on-time address at 10:00:10 — watermark advances
+      // to 10:00:10 after this batch in the event-time query
+      etIn.addData(Envelope.timedUser(u1, 0),
+        Envelope.timedAddress(addr("a1"), ts("2026-01-01 10:00:10"), 1))
+      ptIn.addData(Envelope.ofUser(u1, 0), Envelope.ofAddress(addr("a1"), 1))
+      et.processAllAvailable(); pt.processAllAvailable()
+      // batch 2: a LATE address (event time 09:59:50, behind the
+      // watermark) then an on-time one at 10:00:30
+      etIn.addData(
+        Envelope.timedAddress(addr("late"), ts("2026-01-01 09:59:50"), 1),
+        Envelope.timedAddress(addr("a3"), ts("2026-01-01 10:00:30"), 2))
+      ptIn.addData(Envelope.ofAddress(addr("late"), 1),
+        Envelope.ofAddress(addr("a3"), 2))
+      et.processAllAvailable(); pt.processAllAvailable()
 
-        def lastAddrs(table: String): Seq[String] = {
-          val snaps = spark.sql(
-            s"SELECT transform(addresses, x -> x.address) FROM $table")
-            .collect().map(_.getSeq[String](0).toList)
-          snaps.maxBy(_.length)
-        }
-        // THE DIVERGENCE: processing-time buffers the late address per the
-        // reference contract (arrival order rules); event-time mode drops
-        // rows behind the watermark before they reach the state machine
-        assert(lastAddrs("j1_pt") == List("a1", "late", "a3"))
-        assert(lastAddrs("j1_et") == List("a1", "a3"))
-      } finally { et.stop(); pt.stop() }
-
-      // ---- event-time TTL: the watermark, not wall clock, retires state
-      val ttlIn = MemoryStream[TimedEnvelope]
-      val ttl = EnrichmentJoinTws.joinStreamEventTime(spark, ttlIn.toDS(),
-        stateTtl = Some(java.time.Duration.ofSeconds(10)))
-        .toDF().writeStream.format("memory").queryName("j1_et_ttl")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        // u1 + a1 at 10:00:10 — timer armed at 10:00:20 (event time)
-        ttlIn.addData(TimedEnvelope.ofUser(u1, 0),
-          TimedEnvelope.ofAddress(addr("a1"), ts("2026-01-01 10:00:10"), 1))
-        ttl.processAllAvailable()
-        // stranger key at 10:01:00 advances the watermark past the timer...
-        val u9 = User("u9", "Zoe", "u9@x.org", "F", ts("2026-01-01 10:01:00"))
-        ttlIn.addData(TimedEnvelope.ofUser(u9, 0))
-        ttl.processAllAvailable()
-        // ...so this batch fires u1's timer and clears its state; the new
-        // address (user now unknown) buffers silently, no emission
-        ttlIn.addData(TimedEnvelope.ofAddress(addr("a2"), ts("2026-01-01 10:01:10"), 1))
-        ttl.processAllAvailable()
-        // u1 re-registers: the snapshot contains ONLY the post-expiry
-        // address — pre-expiry a1 was retired by the event-time TTL
-        ttlIn.addData(TimedEnvelope.ofUser(
-          u1.copy(registerDate = ts("2026-01-01 10:01:20")), 0))
-        ttl.processAllAvailable()
+      def lastAddrs(table: String): Seq[String] = {
         val snaps = spark.sql(
-          "SELECT transform(addresses, x -> x.address) FROM j1_et_ttl")
+          s"SELECT transform(addresses, x -> x.address) FROM $table")
           .collect().map(_.getSeq[String](0).toList)
-        assert(snaps.contains(List("a2")), s"snapshots: ${snaps.toList}")
-        assert(!snaps.exists(_ == List("a1", "a2")),
-          s"TTL-expired a1 resurfaced: ${snaps.toList}")
-      } finally ttl.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        snaps.maxBy(_.length)
       }
-    }
+      // THE DIVERGENCE: processing-time buffers the late address per the
+      // reference contract (arrival order rules); event-time mode drops
+      // rows behind the watermark before they reach the state machine
+      assert(lastAddrs("j1_pt") == List("a1", "late", "a3"))
+      assert(lastAddrs("j1_et") == List("a1", "a3"))
+      // Spark's own progress reports the drop: the one late address
+      def droppedByWatermark(q: StreamingQuery): Long =
+        q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      assert(droppedByWatermark(et) == 1L)
+      assert(droppedByWatermark(pt) == 0L)
+    } finally { et.stop(); pt.stop() }
+
+    // ---- event-time TTL: the watermark, not wall clock, retires state
+    val ttlIn = MemoryStream[Envelope]
+    val ttl = EnrichmentJoin.joinStreamEventTime(spark, ttlIn.toDS(),
+      stateTtl = Some(java.time.Duration.ofSeconds(10)))
+      .toDF().writeStream.format("memory").queryName("j1_et_ttl")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      // u1 + a1 at 10:00:10 — timeout set at 10:00:20 (event time)
+      ttlIn.addData(Envelope.timedUser(u1, 0),
+        Envelope.timedAddress(addr("a1"), ts("2026-01-01 10:00:10"), 1))
+      ttl.processAllAvailable()
+      // stranger key at 10:01:00 advances the watermark past the timeout,
+      // so Spark runs a no-data batch that times u1 out and clears its state...
+      val u9 = User("u9", "Zoe", "u9@x.org", "F", ts("2026-01-01 10:01:00"))
+      ttlIn.addData(Envelope.timedUser(u9, 0))
+      ttl.processAllAvailable()
+      // ...and the new address (user now unknown) buffers silently, no
+      // emission
+      ttlIn.addData(Envelope.timedAddress(addr("a2"), ts("2026-01-01 10:01:10"), 1))
+      ttl.processAllAvailable()
+      // u1 re-registers: the snapshot contains ONLY the post-expiry
+      // address — pre-expiry a1 was retired by the event-time TTL
+      ttlIn.addData(Envelope.timedUser(
+        u1.copy(registerDate = ts("2026-01-01 10:01:20")), 0))
+      ttl.processAllAvailable()
+      val snaps = spark.sql(
+        "SELECT transform(addresses, x -> x.address) FROM j1_et_ttl")
+        .collect().map(_.getSeq[String](0).toList)
+      assert(snaps.contains(List("a2")), s"snapshots: ${snaps.toList}")
+      assert(!snaps.exists(_ == List("a1", "a2")),
+        s"TTL-expired a1 resurfaced: ${snaps.toList}")
+    } finally ttl.stop()
   }
 }

@@ -25,10 +25,10 @@ object EnrichmentJoinPropertySpec extends Properties("EnrichmentJoin") {
     val addrs = scala.collection.mutable.ArrayBuffer.empty[Address]
     val out = scala.collection.mutable.ArrayBuffer.empty[UserAddress]
     events.foreach {
-      case Envelope(_, _, Some(u), _) =>
+      case Envelope(_, _, Some(u), _, _) =>
         user = Some(u)
         out += UserAddress(u, addrs.toVector)
-      case Envelope(_, _, _, Some(a)) =>
+      case Envelope(_, _, _, Some(a), _) =>
         addrs += a
         user.foreach(u => out += UserAddress(u, addrs.toVector))
       case _ =>
